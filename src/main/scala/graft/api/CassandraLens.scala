@@ -50,7 +50,12 @@ class CassandraLens(
       * cached child this tracks) — [[dropRowCache]] must unpersist the
       * real cache, not the derived union.
       */
-    private val cachedFrame: Option[DataFrame] = None) {
+    private val cachedFrame: Option[DataFrame] = None,
+    /** The hot-key set of a partial cache of up to 10,000 keys, kept on the
+      * driver so a keyed read routes by its requested keys (see
+      * [[keyedRead]]).
+      */
+    private val hotKeySet: Option[Set[String]] = None) {
   GraftFunctions.register(cells.sparkSession)
 
   def this(cells: DataFrame, meta: CfMeta, horizons: Option[(DataFrame, DataFrame)]) =
@@ -64,7 +69,7 @@ class CassandraLens(
     */
   def withApplyListener(listener: DataFrame => DataFrame): CassandraLens =
     new CassandraLens(cells, meta, horizons, cachedLive,
-      applyListeners :+ listener, cachedFrame)
+      applyListeners :+ listener, cachedFrame, hotKeySet)
 
   /** Run the attached listener chain over one mutation batch, then re-conform
     * to the canonical cell schema (a transform may add helper columns; the
@@ -91,20 +96,22 @@ class CassandraLens(
     * capacity + ColumnFamilyStore.cacheRow admits per key): pin only
     * `hotKeys`' reconciled rows in executor memory; every other key
     * falls through to the reconcile path INSIDE the same plan (the
-    * cached hot slice unioned with the cold remainder — Catalyst
-    * pushes a keyed read's predicate into both branches, so a hot read
-    * is an InMemoryTableScan hit and a cold read prunes the cached
-    * side empty and runs the ordinary pruned scan+reconcile). At
-    * 100 TB the whole reconciled view cannot be pinned; a bounded hot
-    * set can — pair with [[saveCachedKeys]]/[[loadCachedKeys]] for
-    * restart pre-warming. Hot sets up to the IN-list convention
-    * (10,000 keys, the same bound as the range-scan page pick) become
-    * one pushed-down IN predicate; larger sets split hot from cold by
-    * a BROADCAST semi/anti join instead — a restart pre-warm from a
-    * big saved key set must not build a mega-predicate the optimizer
-    * re-walks on every plan. `MaxHotKeys` bounds the set loudly: the
-    * hot set must stay cache-sized (driver list + broadcast +
-    * executor-pinned rows), never corpus-sized.
+    * cached hot slice unioned with the cold remainder). At 100 TB the
+    * whole reconciled view cannot be pinned; a bounded hot set can —
+    * pair with [[saveCachedKeys]]/[[loadCachedKeys]] for restart
+    * pre-warming. Hot sets up to the IN-list convention (10,000 keys,
+    * the same bound as the range-scan page pick) are reconciled by the
+    * keyed path and stay on the driver as well: a keyed read whose keys
+    * are all hot is served by the cached hot frame ALONE, one whose keys
+    * are all cold runs the ordinary keyed read over `cells`, and only a
+    * mixed key set unions the two ([[keyedRead]]). Larger sets split hot
+    * from cold by a BROADCAST semi/anti join instead — a restart
+    * pre-warm from a big saved key set must not build a mega-predicate
+    * the optimizer re-walks on every plan — and keyed reads filter the
+    * union, where Catalyst pushes the key predicate into both branches.
+    * `MaxHotKeys` bounds the set loudly: the hot set must stay
+    * cache-sized (driver list + broadcast + executor-pinned rows), never
+    * corpus-sized.
     */
   def withRowCache(hotKeys: Seq[String]): CassandraLens = {
     require(hotKeys.nonEmpty, "withRowCache(hotKeys): empty hot set")
@@ -113,19 +120,22 @@ class CassandraLens(
         s"${CassandraLens.MaxHotKeys} — a hot set is cache-sized, not " +
         "corpus-sized; cache fewer keys or use withRowCache() on a " +
         "store small enough to pin whole")
-    val (hot, cold) =
+    val (hot, cold, hotSet) =
       if (hotKeys.size <= 10000)
-        (live.filter(col("key").isin(hotKeys: _*)).cache(),
-          live.filter(!col("key").isin(hotKeys: _*)))
+        (liveFromKeyed(cells.filter(col("key").isin(hotKeys: _*) &&
+            domainPredicate(hotKeys))).cache(),
+          live.filter(!col("key").isin(hotKeys: _*)),
+          Some(hotKeys.toSet))
       else {
         val spark = cells.sparkSession
         import spark.implicits._
         val keys = hotKeys.toDF("key")
         (live.join(broadcast(keys), Seq("key"), "left_semi").cache(),
-          live.join(broadcast(keys), Seq("key"), "left_anti"))
+          live.join(broadcast(keys), Seq("key"), "left_anti"),
+          None)
       }
     new CassandraLens(cells, meta, horizons, Some(hot.unionByName(cold)),
-      applyListeners, cachedFrame = Some(hot))
+      applyListeners, cachedFrame = Some(hot), hotKeySet = hotSet)
   }
 
   /** Persist the cached KEY SET (not the rows) — the reference's
@@ -215,10 +225,45 @@ class CassandraLens(
     case None => Reconcile.liveView(restricted)
   }
 
-  private def liveOf(pred: Column): DataFrame = cachedLive match {
-    case Some(c) => c.filter(pred) // key-scoped predicate: filter the cached view
-    case None => liveFromKeyed(cells.filter(pred))
+  /** Route a keyed read by its requested keys, keeping the live columns
+    * `columns` select (scan-pushable conjuncts on super_name/col_name).
+    * On a hot-key lens with a driver-side hot set, all-hot keys read the
+    * cached hot frame alone, all-cold keys read `cells`, and a mixed set
+    * unions the two; any other cached lens filters its cached view (every
+    * lens predicate is key-scoped, so that equals reconciling the
+    * filtered cells). `fromCache` shapes a cached (already reconciled)
+    * frame, `fromCells` reconciles a key-restricted raw cell set, which
+    * `columns` restrict too, marker cells kept: a name-only predicate
+    * selects whole (key, super_name, col_name) groups and the horizons
+    * come from the markers, so it reaches the parquet scan unchanged in
+    * meaning.
+    */
+  private def keyedRead(keys: Seq[String], columns: Seq[Column])(
+      fromCache: DataFrame => DataFrame, fromCells: DataFrame => DataFrame): DataFrame = {
+    def keyPred(ks: Seq[String]): Column =
+      if (ks.size == 1) col("key") === ks.head else col("key").isin(ks: _*)
+    def cached(c: DataFrame, ks: Seq[String]) = fromCache(c.filter(keyPred(ks)))
+    def cold(ks: Seq[String]) = {
+      val restricted = cells.filter(keyPred(ks) && domainPredicate(ks))
+      fromCells(columns.reduceOption(_ && _)
+        .fold(restricted)(p => restricted.filter(col("col_name").isNull || p)))
+    }
+    val read = (hotKeySet, cachedFrame, cachedLive) match {
+      case (Some(hotSet), Some(hot), _) =>
+        keys.partition(hotSet) match {
+          case (hs, Seq()) => cached(hot, hs)
+          case (Seq(), cs) => cold(cs)
+          case (hs, cs) => cached(hot, hs).unionByName(cold(cs))
+        }
+      case (_, _, Some(c)) => cached(c, keys)
+      case _ => cold(keys)
+    }
+    columns.foldLeft(read)(_.filter(_))
   }
+
+  /** Reconciled live view of the requested keys' selected columns. */
+  private def liveOf(keys: Seq[String], columns: Column*): DataFrame =
+    keyedRead(keys, columns)(identity, liveFromKeyed)
 
   /** Live view of a KEY-BOUNDED restriction: the single-exchange keyed
     * reconcile ([[Reconcile.liveViewKeyed]]) when horizons are
@@ -228,21 +273,25 @@ class CassandraLens(
     * distribution — adding the keyed repartition there would re-shuffle
     * a read that was exchange-FREE (PlanQualitySpec pins that contract).
     */
-  private def liveFromKeyed(restricted: DataFrame): DataFrame = horizons match {
-    case Some(_) => liveFrom(restricted)
-    case None if CassandraLens.bucketedByKey(cells.queryExecution.analyzed) =>
-      liveFrom(restricted)
-    case None => Reconcile.liveViewKeyed(restricted)
-  }
+  private def liveFromKeyed(restricted: DataFrame): DataFrame =
+    if (keepsBranches) liveFrom(restricted) else Reconcile.liveViewKeyed(restricted)
+
+  /** [[liveFromKeyed]]'s value-free twin (the get_count shape). */
+  private def liveColumnsFromKeyed(restricted: DataFrame): DataFrame =
+    if (keepsBranches) liveColumns(restricted) else Reconcile.liveColumnsKeyed(restricted)
+
+  /** Sidecar and key-bucketed stores keep their own keyed-read branches. */
+  private def keepsBranches: Boolean =
+    horizons.nonEmpty || CassandraLens.bucketedByKey(cells.queryExecution.analyzed)
 
   /** domainSplit routing (fork CFMetaData.domainSplit): keyed reads derive
     * the 2-char domain of each requested key, so a domain-partitioned
     * store prunes directories via PartitionFilters.
     */
   private def domainPredicate(keys: Seq[String]): Column =
-    // the domain column is a raw-scan pruning aid only: the cached live
-    // view (row cache) does not carry it, and needs no directory pruning
-    if (cachedLive.isEmpty && meta.domainSplit && cells.columns.contains("domain"))
+    // a raw-scan pruning aid only: the cached live view does not carry
+    // the domain column, and needs no directory pruning
+    if (meta.domainSplit && cells.columns.contains("domain"))
       col("domain").isin(keys.map(_.takeRight(2)).distinct: _*)
     else lit(true)
 
@@ -276,11 +325,8 @@ class CassandraLens(
   /** Q1 `get` (thrift:300-304): one column / subcolumn / supercolumn. */
   def get(key: String, superName: Option[Array[Byte]], colName: Array[Byte]): DataFrame = {
     require(key.nonEmpty, "zero-length key")
-    val base = liveOf(col("key") === key && domainPredicate(Seq(key)))
-    superName match {
-      case Some(sc) => base.filter(col("super_name") === lit(sc) && col("col_name") === lit(colName))
-      case None => base.filter(col("super_name").isNull && col("col_name") === lit(colName))
-    }
+    val scope = superName.fold(col("super_name").isNull)(col("super_name") === lit(_))
+    liveOf(Seq(key), scope, col("col_name") === lit(colName))
   }
 
   /** Q1 `get` with a ColumnPath naming only a SUPERCOLUMN (column unset):
@@ -289,8 +335,7 @@ class CassandraLens(
     */
   def getSuperColumn(key: String, superName: Array[Byte]): DataFrame = {
     require(key.nonEmpty, "zero-length key")
-    liveOf(col("key") === key && domainPredicate(Seq(key)))
-      .filter(col("super_name") === lit(superName))
+    liveOf(Seq(key), col("super_name") === lit(superName))
   }
 
   /** Q2 `get_slice` (thrift:310-315) for one key = Q4 over a single key. */
@@ -303,8 +348,9 @@ class CassandraLens(
     */
   def multigetSlice(keys: Seq[String], superName: Option[Array[Byte]], pred: SlicePredicate): DataFrame = {
     keys.foreach(k => require(k.nonEmpty, "zero-length key"))
-    val keyPred = if (keys.size == 1) col("key") === keys.head else col("key").isin(keys: _*)
-    sliceOver(liveOf(keyPred && domainPredicate(keys)), superName, pred)
+    val (cmp, nameCol, scope, _) = sliceScope(superName, pred)
+    sliceOver(liveOf(keys, scope +: Slice.scanFilters(cmp, nameCol, pred): _*),
+      superName, pred)
   }
 
   /** multiget_slice for a LARGE key set carried as a DataFrame: a broadcast
@@ -321,20 +367,27 @@ class CassandraLens(
     sliceOver(restricted, superName, pred)
   }
 
-  /** Slice machinery shared by point reads and range scans. */
-  private def sliceOver(live: DataFrame, superName: Option[Array[Byte]], pred: SlicePredicate): DataFrame =
-    superName match {
-      case Some(sc) =>
-        validatePredicate(pred, subCmp)
-        Slice(live.filter(col("super_name") === lit(sc)), subCmp, "col_name", pred,
-          perKey = Seq("key", "super_name"))
-      case None if meta.isSuper =>
-        validatePredicate(pred, topCmp)
-        Slice(live, topCmp, "super_name", pred)
-      case None =>
-        validatePredicate(pred, topCmp)
-        Slice(live.filter(col("super_name").isNull), topCmp, "col_name", pred)
+  /** A slice's target, validated: the sliced dimension's comparator and
+    * column, the column scope and the per-entity rank partition. For a super
+    * CF with no supercolumn parent the sliced entities are the
+    * supercolumns; with a parent, its subcolumns (subcomparator order).
+    */
+  private def sliceScope(superName: Option[Array[Byte]], pred: SlicePredicate)
+      : (ComparatorType.Value, String, Column, Seq[String]) = {
+    val target = superName match {
+      case Some(sc) => (subCmp, "col_name", col("super_name") === lit(sc), Seq("key", "super_name"))
+      case None if meta.isSuper => (topCmp, "super_name", lit(true), Seq("key"))
+      case None => (topCmp, "col_name", col("super_name").isNull, Seq("key"))
     }
+    validatePredicate(pred, target._1)
+    target
+  }
+
+  /** Slice machinery shared by point reads and range scans. */
+  private def sliceOver(live: DataFrame, superName: Option[Array[Byte]], pred: SlicePredicate): DataFrame = {
+    val (cmp, nameCol, scope, perKey) = sliceScope(superName, pred)
+    Slice(live.filter(scope), cmp, nameCol, pred, perKey)
+  }
 
   /** Q5 `get_count` over every key (the hadoop-connector-style full scan
     * shape): live top-level-entity count per key. Counting never needs the
@@ -348,22 +401,16 @@ class CassandraLens(
   }
 
   /** Q5 `get_count` (thrift:342-346): live column count per key —
-    * value-free like [[getCountAll]] unless the row cache already holds
+    * value-free like [[getCountAll]] (the keyed one-pass shape,
+    * [[Reconcile.liveColumnsKeyed]]) unless the row cache already holds
     * the reconciled view.
     */
   def getCount(keys: Seq[String], superName: Option[Array[Byte]]): DataFrame = {
-    val keyPred = col("key").isin(keys: _*)
-    val base = cachedLive match {
-      case Some(c) => c.filter(keyPred)
-      case None => liveColumns(cells.filter(keyPred))
-    }
-    superName match {
-      case Some(sc) =>
-        Slice.count(base.filter(col("super_name") === lit(sc)),
-          isSuper = false, perKey = Seq("key", "super_name"))
-      case None =>
-        Slice.count(base, meta.isSuper)
-    }
+    val scope = superName.map(col("super_name") === lit(_)).toSeq
+    val base = keyedRead(keys, scope)(
+      _.select(col("key"), col("super_name"), col("col_name")), liveColumnsFromKeyed)
+    if (superName.isEmpty) Slice.count(base, meta.isSuper)
+    else Slice.count(base, isSuper = false, perKey = Seq("key", "super_name"))
   }
 
   // ---- Q6: range scans ----
@@ -574,7 +621,9 @@ class CassandraLens(
 
   /** The live (key, super_name, col_name) set of a raw cell range,
     * computed WITHOUT values — the shared metadata-only liveness frame
-    * behind [[liveKeySet]] and the value-free get_count paths. Tombstone
+    * behind the sidecar [[liveKeySet]], [[getCountAll]], the existence
+    * probes, and get_count on sidecar and key-bucketed stores (other
+    * keyed get_counts run [[Reconcile.liveColumnsKeyed]]). Tombstone
     * wins timestamp ties, so a column is live iff its best LIVE ts
     * strictly exceeds both its best tombstone ts and the container
     * horizons — two scalar max buffers (plain HashAggregate; a struct

@@ -37,6 +37,10 @@ object Comparators {
     case _ => None
   }
 
+  /** True iff `cmp` orders names by their raw bytes (sort key = the name). */
+  def rawOrder(cmp: ComparatorType.Value): Boolean =
+    cmp == ComparatorType.Bytes || cmp == ComparatorType.Ascii || cmp == ComparatorType.Utf8
+
   /** Sort key Column for `col` (binary column-name bytes) under `cmp`.
     * The empty byte-array (slice sentinel / degenerate name) sorts FIRST for
     * every comparator (reference AbstractType compare: length-0 first), which
@@ -44,8 +48,7 @@ object Comparators {
     * (Spark sorts nulls first in ascending order).
     */
   def sortKey(cmp: ComparatorType.Value, col: Column): Column = cmp match {
-    case ComparatorType.Bytes | ComparatorType.Ascii | ComparatorType.Utf8 =>
-      col
+    case _ if rawOrder(cmp) => col
     case ComparatorType.Long_ =>
       when(length(col) === 0, lit(null)).otherwise(beLong(col))
     case ComparatorType.TimeUuid =>

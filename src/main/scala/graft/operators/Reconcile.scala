@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Merge & reconciliation operators (SURVEY §2.3) — the heart of the engine.
@@ -128,15 +129,20 @@ object Reconcile {
   def liveViewGiven(cells: DataFrame, rowDel: DataFrame, scDel: DataFrame): DataFrame =
     shadowByContainersGiven(latestCells(cells), rowDel, scDel).filter(!col("tombstone"))
 
-  /** [[liveView]] for a KEY-BOUNDED cell set (round 20) — point reads,
-    * multigets, materialized range pages: repartition the restricted
-    * cells by `key` ONCE. HashPartitioning(key) clusters the reconcile
-    * aggregate, both horizon aggregates, the container-shadow joins, and
-    * the caller's per-key slice window, so they all stack behind that
-    * single exchange — and the three branches are IDENTICAL exchange
-    * subtrees, so ReuseExchange scans and shuffles the restriction once
-    * instead of three times (the r19 keyed-read plan carried 5 scans,
-    * 3 shuffle exchanges and 2 broadcast builds for a 150-key multiget).
+  /** [[liveView]] for a KEY-BOUNDED cell set — point reads, multigets,
+    * materialized range pages — in ONE keyed pass, the analog of the
+    * reference's single collated merge (CollatingIterator +
+    * ColumnFamily.resolve): the restriction is scanned once and
+    * repartitioned by `key` once; one aggregate per (key, super_name,
+    * col_name) yields both the LWW winner and `tmax`, the column's best
+    * tombstone ts. Marker groups (col_name NULL) reduce alongside, so
+    * their `tmax` IS the container horizon: [[shadowKeyed]] spreads it
+    * over `key` (row) and (key, super_name) (supercolumn) as windows.
+    * HashPartitioning(key) satisfies the aggregate, both windows and the
+    * caller's per-key slice window, so the whole read runs behind that
+    * one exchange — no horizon branches, no broadcast joins. Horizons
+    * come from `tmax`, not the marker's winner, so they equal the
+    * raw-cell [[rowTombstones]]/[[superTombstones]] horizons.
     * KEY-BOUNDED ONLY: the full-CF [[liveView]] keeps map-side partial
     * aggregation ahead of its exchange — shuffling raw versions of a
     * 100 TB CF would forfeit that compression — while a keyed read's
@@ -144,9 +150,62 @@ object Reconcile {
     * keyed shuffle is small by construction at any corpus size.
     */
   def liveViewKeyed(cells: DataFrame): DataFrame = {
-    val c = cells.repartition(col("key"))
-    shadowByContainersGiven(latestCells(c), rowTombstones(c), superTombstones(c))
-      .filter(!col("tombstone"))
+    graft.functions.GraftFunctions.register(cells.sparkSession)
+    val perColumn = cells.repartition(col("key"))
+      .groupBy(col("key"), col("super_name"), col("col_name"))
+      .agg(
+        call_function("graft_reconcile",
+          col("value"), col("ts"), col("tombstone"), col("local_del_time")).as("w"),
+        tombstoneMax)
+    shadowKeyed(perColumn, when(!col("w.tombstone"), col("w.ts")))
+      .select(
+        col("key"),
+        col("super_name"),
+        col("col_name"),
+        col("w.value").as("value"),
+        col("w.ts").as("ts"),
+        col("w.tombstone").as("tombstone"),
+        col("w.local_del_time").as("local_del_time"))
+  }
+
+  /** The live (key, super_name, col_name) set of a KEY-BOUNDED cell set,
+    * value-free: [[liveViewKeyed]]'s shape with the winner replaced by two
+    * scalar maxima. Tombstone wins timestamp ties, so a column is live iff
+    * its best live ts strictly beats its best tombstone ts and both
+    * container horizons — whether the winner is live never depends on
+    * the value, so the value column stays pruned out of the scan.
+    */
+  def liveColumnsKeyed(cells: DataFrame): DataFrame = {
+    val perColumn = cells
+      .select(col("key"), col("super_name"), col("col_name"), col("ts"), col("tombstone"))
+      .repartition(col("key"))
+      .groupBy(col("key"), col("super_name"), col("col_name"))
+      .agg(max(when(!col("tombstone"), col("ts"))).as("lmax"), tombstoneMax)
+    shadowKeyed(perColumn,
+      when(col("lmax") > coalesce(col("tmax"), lit(Long.MinValue)), col("lmax")))
+      .select(col("key"), col("super_name"), col("col_name"))
+  }
+
+  private def tombstoneMax = max(when(col("tombstone"), col("ts"))).as("tmax")
+
+  /** Container shadowing for a key-clustered per-column frame carrying
+    * `tmax`: the row horizon is the max `tmax` of the key's row marker,
+    * the supercolumn horizon that of its (key, super_name) marker — both
+    * windows partitioned on a superset of `key`, so they need no
+    * exchange of their own. Keeps the non-marker columns whose `liveTs`
+    * (null for a dead column) strictly beats both horizons, exactly the
+    * [[shadowByContainersGiven]] filter.
+    */
+  private def shadowKeyed(perColumn: DataFrame, liveTs: Column): DataFrame = {
+    val marker = col("col_name").isNull
+    def horizon(markerKind: Column, keys: String*) =
+      max(when(marker && markerKind, col("tmax")))
+        .over(Window.partitionBy(keys.map(col): _*))
+    perColumn
+      .withColumn("sc_del_ts", horizon(col("super_name").isNotNull, "key", "super_name"))
+      .withColumn("row_del_ts", horizon(col("super_name").isNull, "key"))
+      .filter(!marker && liveTs > coalesce(
+        greatest(col("row_del_ts"), col("sc_del_ts")), lit(Long.MinValue)))
   }
 
   /** Compaction output view (SURVEY §2.7): winning versions with tombstones

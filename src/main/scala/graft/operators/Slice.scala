@@ -41,35 +41,54 @@ object Slice {
       cmp: ComparatorType.Value,
       nameCol: String,
       pred: SlicePredicate,
-      perKey: Seq[String] = Seq("key")): DataFrame = pred match {
-
-    case SliceByNames(names) =>
-      // NamesQueryFilter (db/filter/NamesQueryFilter.java:31-91)
-      live.filter(col(nameCol).isin(names.map(lit(_)): _*))
-
-    case SliceRange(start, finish, reversed, count) =>
-      val sk = Comparators.sortKey(cmp, col(nameCol))
-      val skLit = (b: Array[Byte]) => Comparators.sortKey(cmp, lit(b))
-      // In a reversed slice `start` is the upper bound (thrift:202-213).
-      val (lo, hi) = if (reversed) (finish, start) else (start, finish)
-      var out = live.withColumn("_sk", sk)
-      if (lo.nonEmpty) out = out.filter(col("_sk") >= skLit(lo))
-      if (hi.nonEmpty) out = out.filter(col("_sk") <= skLit(hi))
-      if (lo.nonEmpty && hi.nonEmpty)
-        // redundant raw-byte range that parquet CAN push (page pruning on
-        // the decoded-comparator sort key's source column)
-        Comparators.pushdownRange(cmp, col(nameCol), lo, hi)
-          .foreach(p => out = out.filter(p))
-      if (count == Int.MaxValue) out.drop("_sk") // unlimited slice: skip the rank
-      else {
-        val order = if (reversed) col("_sk").desc_nulls_last else col("_sk").asc_nulls_first
+      perKey: Seq[String] = Seq("key")): DataFrame = {
+    val named = nameFilters(cmp, nameCol, pred).foldLeft(live)(_.filter(_))
+    pred match {
+      case SliceRange(_, _, reversed, count) if count != Int.MaxValue =>
+        val sk = Comparators.sortKey(cmp, col(nameCol))
+        val order = if (reversed) sk.desc_nulls_last else sk.asc_nulls_first
         val w = Window.partitionBy(perKey.map(col): _*).orderBy(order)
-        out
+        named
           .withColumn("_rank", dense_rank().over(w))
           .filter(col("_rank") <= count)
-          .drop("_rank", "_sk")
-      }
+          .drop("_rank")
+      case _ => named // names, or an unlimited slice: no rank
+    }
   }
+
+  /** The per-name conjuncts of a slice predicate, ahead of its count rank:
+    * the name list (NamesQueryFilter, db/filter/NamesQueryFilter.java:31-91)
+    * or the start/finish bounds in comparator order.
+    */
+  def nameFilters(cmp: ComparatorType.Value, nameCol: String, pred: SlicePredicate): Seq[Column] =
+    pred match {
+      case SliceByNames(names) => Seq(col(nameCol).isin(names.map(lit(_)): _*))
+      case r: SliceRange =>
+        val (lo, hi) = bounds(r)
+        val sk = Comparators.sortKey(cmp, col(nameCol))
+        val skLit = (b: Array[Byte]) => Comparators.sortKey(cmp, lit(b))
+        (Option.when(lo.nonEmpty)(sk >= skLit(lo)) ++
+          Option.when(hi.nonEmpty)(sk <= skLit(hi)) ++
+          // a redundant raw-byte range that parquet CAN push (page pruning
+          // on the decoded-comparator sort key's source column)
+          Comparators.pushdownRange(cmp, col(nameCol), lo, hi)).toSeq
+    }
+
+  /** The [[nameFilters]] conjuncts a parquet scan can evaluate: the name
+    * list and raw-byte ranges. They depend on the column's name alone, so a
+    * keyed read also applies them to the raw cells before reconciling.
+    */
+  def scanFilters(cmp: ComparatorType.Value, nameCol: String, pred: SlicePredicate): Seq[Column] =
+    pred match {
+      case r: SliceRange if !Comparators.rawOrder(cmp) =>
+        val (lo, hi) = bounds(r)
+        Comparators.pushdownRange(cmp, col(nameCol), lo, hi).toSeq
+      case _ => nameFilters(cmp, nameCol, pred)
+    }
+
+  // In a reversed slice `start` is the upper bound (thrift:202-213).
+  private def bounds(r: SliceRange): (Array[Byte], Array[Byte]) =
+    if (r.reversed) (r.finish, r.start) else (r.start, r.finish)
 
   /** Read-amplification guard (fork ReadColumnsLimit,
     * db/filter/SliceQueryFilter.java:113-146 + DatabaseDescriptor:2114-2120):

@@ -19,6 +19,32 @@ class PlanQualitySpec extends SparkSpec {
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Physical nodes of an EXECUTED frame, through the AQE stage wrappers
+    * (an InMemoryTableScan's cached plan is not a child, so a cache hit
+    * shows no scan of the store).
+    */
+  private def physicalNodes(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }).flatMap(walk)
+    df.collect()
+    walk(df.queryExecution.executedPlan)
+  }
+
+  /** (key, super, col, value) rows of a read. */
+  private def cellRows(df: org.apache.spark.sql.DataFrame)
+      : Set[(String, Option[String], String, String)] =
+    df.select("key", "super_name", "col_name", "value").collect().map { r =>
+      (r.getString(0), Option(r.getAs[Array[Byte]](1)).map(new String(_, "UTF-8")),
+        new String(r.getAs[Array[Byte]](2), "UTF-8"),
+        new String(r.getAs[Array[Byte]](3), "UTF-8"))
+    }.toSet
+
   test("reconcile is a hash aggregate (ObjectHashAggregate), never sort-based") {
     val plan = planOf(Reconcile.liveView(cellsDf(cells)))
     assert(plan.contains("ObjectHashAggregate"), plan.take(1200))
@@ -80,27 +106,32 @@ class PlanQualitySpec extends SparkSpec {
     assert(got.toSeq == Seq((1L, 17L), (2L, 17L), (3L, 16L)), got.mkString(","))
   }
 
-  test("value-free liveness equals the full reconcile on random cell soups") {
-    import spark.implicits._
-    // collision-heavy generator: few keys/cols/supers, ts drawn from a
-    // small set INCLUDING Long.MaxValue, mixed inserts / column & SC & row
-    // tombstones — everything the liveness-equivalence argument covers
-    val rnd = new scala.util.Random(2026)
+  /** Collision-heavy cell soup: few keys/cols/supers, ts drawn from a
+    * small set INCLUDING Long.MaxValue, mixed inserts / column & SC & row
+    * tombstones — everything the liveness-equivalence argument covers.
+    */
+  private def cellSoup(rnd: scala.util.Random): Seq[graft.model.Cell] = {
     val tsChoices = Seq(1L, 2L, 3L, 5L, 100L, Long.MaxValue)
     def t() = tsChoices(rnd.nextInt(tsChoices.size))
-    for (_ <- 1 to 6) {
-      val cells = (1 to 150).map { _ =>
-        val key = s"k${rnd.nextInt(4)}"
-        rnd.nextInt(12) match {
-          case 0 => delRow(key, t())
-          case 1 => delSuper(key, s"s${rnd.nextInt(2)}", t())
-          case n =>
-            val sup = if (n % 3 == 0) s"s${rnd.nextInt(2)}" else null
-            val c = s"c${rnd.nextInt(3)}"
-            if (n < 5) del(key, c, t(), sup = sup)
-            else ins(key, c, s"v$n", t(), sup = sup)
-        }
+    (1 to 150).map { _ =>
+      val key = s"k${rnd.nextInt(4)}"
+      rnd.nextInt(12) match {
+        case 0 => delRow(key, t())
+        case 1 => delSuper(key, s"s${rnd.nextInt(2)}", t())
+        case n =>
+          val sup = if (n % 3 == 0) s"s${rnd.nextInt(2)}" else null
+          val c = s"c${rnd.nextInt(3)}"
+          if (n < 5) del(key, c, t(), sup = sup)
+          else ins(key, c, s"v$n", t(), sup = sup)
       }
+    }
+  }
+
+  test("value-free liveness equals the full reconcile on random cell soups") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(2026)
+    for (_ <- 1 to 6) {
+      val cells = cellSoup(rnd)
       val df = cellsDf(cells)
       val lens = new CassandraLens(df, CfMeta("t"))
       def names(rows: Array[org.apache.spark.sql.Row]) = rows.map { r =>
@@ -119,6 +150,65 @@ class PlanQualitySpec extends SparkSpec {
       assert(rollupKeys == expectedKeys,
         s"rollup diverged: extra=${rollupKeys.diff(expectedKeys)} " +
           s"missing=${expectedKeys.diff(rollupKeys)}")
+    }
+  }
+
+  test("keyed reads equal slices of the full liveView on random cell soups") {
+    // (key, super, col, value) rows of a read, and of the full-CF liveView
+    // sliced in plain Scala — names are ASCII, so BytesType order is
+    // String order
+    type Row4 = (String, Option[String], String, String)
+    def counts(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.collect().map(r => r.getString(0) -> r.getLong(r.length - 1)).toMap
+    // per key: keep the first `count` entities (by `entity`) in slice order
+    def slice(live: Set[Row4], keys: Seq[String], entity: Row4 => String,
+        count: Int, reversed: Boolean): Set[Row4] =
+      live.filter(r => keys.contains(r._1)).groupBy(_._1).values.flatMap { rs =>
+        val order = rs.toSeq.map(entity).distinct.sorted
+        val kept = (if (reversed) order.reverse else order).take(count).toSet
+        rs.filter(r => kept(entity(r)))
+      }.toSet
+    def countOf(live: Set[Row4], entity: Row4 => String): Map[String, Long] =
+      live.groupBy(_._1).map { case (k, rs) => k -> rs.map(entity).size.toLong }
+    val rnd = new scala.util.Random(2027)
+    val keys = Seq("k0", "k1", "k2", "k3")
+    for (_ <- 1 to 4) {
+      val soup = cellSoup(rnd)
+      // a standard CF (the soup's standard cells and row markers) and a
+      // super CF (its supercolumn cells and all markers)
+      val stdDf = cellsDf(soup.filter(_.super_name == null))
+      val superDf = cellsDf(soup.filter(c => c.super_name != null || c.col_name == null))
+      val std = new CassandraLens(stdDf, CfMeta("t"))
+      val sup = new CassandraLens(superDf, CfMeta("t", isSuper = true))
+      val stdLive = cellRows(Reconcile.liveView(stdDf))
+      val supLive = cellRows(Reconcile.liveView(superDf))
+      for (_ <- 1 to 4) {
+        val (k, c) = (keys(rnd.nextInt(4)), s"c${rnd.nextInt(3)}")
+        val (lens, live, sc) =
+          if (rnd.nextBoolean()) (sup, supLive, Some(s"s${rnd.nextInt(2)}"))
+          else (std, stdLive, None)
+        assert(cellRows(lens.get(k, sc.map(b), b(c))) ==
+          live.filter(r => r._1 == k && r._2 == sc && r._3 == c), s"get($k, $sc, $c)")
+      }
+      for (k <- keys.take(2); reversed <- Seq(false, true)) {
+        val got = cellRows(std.getSlice(k, None, SliceRange(reversed = reversed, count = 2)))
+        assert(got == slice(stdLive, Seq(k), _._3, 2, reversed), s"getSlice($k, rev=$reversed)")
+      }
+      val multi = keys :+ "absent"
+      assert(cellRows(std.multigetSlice(multi, None, SliceRange(count = 1))) ==
+        slice(stdLive, multi, _._3, 1, reversed = false), "multigetSlice")
+      assert(counts(std.getCount(multi, None)) == countOf(stdLive, _._3), "getCount")
+      for (reversed <- Seq(false, true)) {
+        assert(cellRows(sup.multigetSlice(keys, None, SliceRange(reversed = reversed, count = 1))) ==
+          slice(supLive, keys, _._2.get, 1, reversed), s"super slice, no parent, rev=$reversed")
+        val underS0 = supLive.filter(_._2.contains("s0"))
+        assert(cellRows(sup.multigetSlice(keys, Some(b("s0")),
+          SliceRange(reversed = reversed, count = 2))) ==
+          slice(underS0, keys, _._3, 2, reversed), s"super slice under s0, rev=$reversed")
+      }
+      assert(counts(sup.getCount(keys, None)) == countOf(supLive, _._2.get), "super getCount")
+      assert(counts(sup.getCount(keys, Some(b("s0")))) ==
+        countOf(supLive.filter(_._2.contains("s0")), _._3), "super getCount under s0")
     }
   }
 
@@ -209,21 +299,102 @@ class PlanQualitySpec extends SparkSpec {
       numPartitions = 4)
     val plens = new CassandraLens(spark.read.parquet(s"$dir/store"), CfMeta("t"))
     val warm = plens.withRowCache(Seq("k001", "k002"))
+    def isCache(n: org.apache.spark.sql.execution.SparkPlan) =
+      n.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]
+    def isScan(n: org.apache.spark.sql.execution.SparkPlan) =
+      n.isInstanceOf[org.apache.spark.sql.execution.FileSourceScanExec]
     try {
-      // hot key: served from the cached branch
-      val hot = warm.multigetSlice(Seq("k001"), None, SliceRange(count = 3))
-      assert(planOf(hot).contains("InMemoryTableScan"), planOf(hot).take(2000))
+      // all-hot keys: served from the cached hot frame ALONE
+      val hot = warm.multigetSlice(Seq("k001", "k002"), None, SliceRange(count = 3))
+      val hotNodes = physicalNodes(hot)
+      assert(hotNodes.exists(isCache) && !hotNodes.exists(isScan), planOf(hot).take(2000))
       assert(liveValues(hot) == Map("c1" -> "a", "c2" -> "b", "c3" -> "c"))
-      // cold key: the union's cold branch must still reach the parquet
-      // scan with the KEY predicate pushed — a partial cache that
-      // defeated pushdown would re-reconcile the corpus per cold read
+      assert(!physicalNodes(warm.getCount(Seq("k002"), None)).exists(isScan))
+      // all-cold keys: the keyed read over the store, no cache scan, the
+      // KEY predicate pushed — a partial cache that defeated pushdown
+      // would re-reconcile the corpus per cold read
       val cold = warm.multigetSlice(Seq("k010"), None, SliceRange(count = 3))
+      val coldNodes = physicalNodes(cold)
+      assert(!coldNodes.exists(isCache) && coldNodes.count(isScan) == 1, planOf(cold))
       val fplan = cold.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       assert(fplan.contains("PushedFilters") && fplan.contains("k010"),
         fplan.take(2500))
       assert(liveValues(cold) == Map("c1" -> "a", "c2" -> "b", "c3" -> "c"))
+      // a mixed key set answers from both sides, slices and counts alike
+      val mixed = Seq("k001", "k010", "k020")
+      assert(cellRows(warm.multigetSlice(mixed, None, SliceRange(count = 2))) ==
+        cellRows(plens.multigetSlice(mixed, None, SliceRange(count = 2))))
+      assert(warm.getCount(mixed, None).collect().toSet ==
+        plens.getCount(mixed, None).collect().toSet)
     } finally warm.dropRowCache()
+  }
+
+  test("keyed reads: one store scan behind at most one exchange, no broadcast, no sort aggregate") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
+    val dir = java.nio.file.Files.createTempDirectory("graft_pq_keyed").toString
+    val deletes = Seq(delRow("k002", 2), del("k001", "c2", 3), ins("k001", "c4", "d", 3))
+    graft.sources.CellStore.write(cellsDf(cells ++ deletes), CfMeta("t"), s"$dir/std",
+      numPartitions = 4)
+    val supers = Seq(ins("k001", "c1", "a", 1, sup = "s0"), ins("k001", "c2", "b", 1, sup = "s0"),
+      ins("k001", "c1", "e", 1, sup = "s1"), delSuper("k001", "s1", 2),
+      ins("k002", "c1", "f", 1, sup = "s0"), delRow("k002", 1))
+    val superMeta = CfMeta("t", isSuper = true)
+    graft.sources.CellStore.write(cellsDf(supers), superMeta, s"$dir/super", numPartitions = 2)
+    val std = new CassandraLens(spark.read.parquet(s"$dir/std"), CfMeta("t"))
+    val sup = new CassandraLens(spark.read.parquet(s"$dir/super"), superMeta)
+    val reads = Seq(
+      "get" -> std.get("k001", None, b("c1")),
+      "getSlice reversed" -> std.getSlice("k001", None, SliceRange(reversed = true, count = 2)),
+      "multigetSlice" -> std.multigetSlice(Seq("k001", "k002", "k040"), None, SliceRange(count = 2)),
+      "getCount" -> std.getCount(Seq("k001", "k002"), None),
+      "super slice" -> sup.multigetSlice(Seq("k001", "k002"), None, SliceRange(count = 1)),
+      "super sub-slice" -> sup.getSlice("k001", Some(b("s0")), SliceRange(count = 2)))
+    reads.foreach { case (name, df) =>
+      val nodes = physicalNodes(df)
+      val scans = nodes.count(_.isInstanceOf[FileSourceScanExec])
+      val exchanges = nodes.count {
+        case _: ShuffleExchangeLike | _: ReusedExchangeExec => true
+        case _ => false
+      }
+      val plan = planOf(df)
+      assert(scans == 1, s"$name: $scans scans\n$plan")
+      assert(exchanges <= 1, s"$name: $exchanges exchanges\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeLike]), s"$name: broadcast\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]), s"$name: sort aggregate\n$plan")
+    }
+    assert(liveValues(std.getSlice("k001", None, SliceRange(count = 5))) ==
+      Map("c1" -> "a", "c3" -> "c", "c4" -> "d"))
+    assert(std.getSlice("k002", None, SliceRange(count = 5)).count() == 0)
+    assert(cellRows(sup.multigetSlice(Seq("k001", "k002"), None, SliceRange(count = 5))) ==
+      Set(("k001", Some("s0"), "c1", "a"), ("k001", Some("s0"), "c2", "b")))
+  }
+
+  test("two-phase range pick (twoPhasePickBytes=0) returns the single-phase page") {
+    // CfMeta's default OrderPreserving partitioner: ring order = key order,
+    // so the two-phase prefix pick engages once its size gate is lowered
+    val gate = "spark.graft.range.twoPhasePickBytes"
+    def store(dead: Int => Boolean, n: Int): CassandraLens =
+      new CassandraLens(cellsDf((0 until n).flatMap { i =>
+        val k = f"p$i%03d"
+        Seq(ins(k, "c1", s"v$i", 1), ins(k, "c2", "w", 1)) ++
+          (if (dead(i)) Seq(delRow(k, 5)) else Nil)
+      }), CfMeta("t"))
+    // maxKeys 10 ⇒ a 40-key over-fetch prefix
+    val cases = Seq(
+      "prefix all dead: falls back to the full pick" -> store(_ < 60, 100),
+      "tombstone-heavy prefix: page from the prefix" -> store(i => i < 40 && i % 3 != 0, 100),
+      "store shorter than the over-fetch" -> store(_ % 4 != 0, 30))
+    cases.foreach { case (name, lens) =>
+      def page() = cellRows(lens.rangeSliceByKeys(None, None, None, SliceRange(count = 5), 10))
+      val single = page() // default gate (1 GB): the single-phase fullPick
+      spark.conf.set(gate, "0")
+      val twoPhase = try page() finally spark.conf.unset(gate)
+      assert(single.nonEmpty, name)
+      assert(twoPhase == single, s"$name: ${twoPhase.diff(single)} vs ${single.diff(twoPhase)}")
+    }
   }
 
   test("bucketed adjacency: triangleDelta probes never exchange the standing edges") {
